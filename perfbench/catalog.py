@@ -35,8 +35,8 @@ from .stats import summarize
 from .trace import catalyst_phases
 
 SWEEP_STRIDE = 10
-SETUP_REPEATS = 5
-ORACLE_PER_RUN = 5
+SETUP_REPEATS = 3
+ORACLE_PER_RUN = 4
 MODULES = ("catalog", "relational_ext", "expr_ext", "northstar", "llm_ext")
 
 

@@ -8,11 +8,13 @@ normalize_flight_stream -> foreachBatch. Each batch runs warehouse_load,
 then curated_view -> next_export_batch -> WatermarkStore.advance, and ships
 the exported rows to the client as Arrow.
 
-Before the stream starts, the warehouse is seeded with one page through
-the same load and export (this also takes the engine's first-use cost out
-of the measured window). Set-up time is the median of SETUP_REPEATS
-starts of the stream query against an empty spool, each run to its first
-trigger and stopped.
+Set-up time is the median of SETUP_REPEATS starts of the stream query
+against an empty spool, each run to its first trigger and stopped. Then
+the stream starts for good and its first page, written before the window
+opens, seeds the warehouse; that batch pays the engine's first-use cost
+and is kept out of the metrics. (One seed page only: pages written in the
+same millisecond may be read in either order, and the fact merge lets
+the later batch win.)
 """
 
 from __future__ import annotations
@@ -36,7 +38,7 @@ from .trace import ProgressLog, catalyst_phases
 from .wire import NOW_EXPR, Page, WireGenerator, expected_fact
 
 PAGE_EVENTS = 100  # the reference poller's per-call limit
-PAGE_INTERVAL_S = 10.0  # well above the 5-7.5 s per batch seen at HEAD, so no backlog builds
+PAGE_INTERVAL_S = 12.0  # above the 5-10 s per batch seen at HEAD on a loaded host: no backlog
 SETUP_REPEATS = 5
 EXPORT_LIMIT = 300  # the reference export's batch size
 TABLES = ("dim_airline", "dim_airport", "dim_route", "fact_flight_status")
@@ -55,8 +57,12 @@ def arrow_rows(table) -> list[dict]:
 
 def _version_files(table) -> tuple[int, int, int, int]:
     """(bytes, data files, rows, rows stamped with the newest last_updated)
-    of a table's current version, read from the files, not through Spark."""
-    path = os.path.join(table.path, table._current_version())
+    of a table's current version, read from the files, not through Spark;
+    zeros before the first commit."""
+    version = table._current_version()
+    if version is None:
+        return 0, 0, 0, 0
+    path = os.path.join(table.path, version)
     total = files = 0
     for root, _, names in os.walk(path):
         for n in names:
@@ -129,13 +135,6 @@ def run(ctx) -> dict:
     os.makedirs(spool)
     os.makedirs(tmp_dir)
 
-    # Seed the warehouse with one page through the batch path.
-    pages = [gen.page(PAGE_EVENTS)]
-    _write_page(pages[0], tmp_dir, tmp_dir, 0)
-    seed_df = spark.read.schema(FLIGHT_WIRE_SCHEMA).json(os.path.join(tmp_dir, "page-000000.json"))
-    pipeline.warehouse_load(wh, pipeline.normalize_flight_stream(seed_df, NOW_EXPR))
-    export.drain(traced=False)
-
     setups = []
     for i in range(SETUP_REPEATS):
         empty = os.path.join(work, f"setup_spool_{i}")
@@ -147,15 +146,13 @@ def run(ctx) -> dict:
         setups.append(time.perf_counter() - t0)
 
     progress = ProgressLog()
-    spark.streams.addListener(progress)
     due: list[float] = []
     late: list[float] = []
     batches: list[dict] = []
     errors: list[str] = []
 
     def sink(batch_df, epoch_id: int) -> None:
-        i = len(batches) + 1  # page 0 seeded the warehouse
-        b = {"page": i, "start": time.perf_counter()}
+        b = {"page": len(batches), "start": time.perf_counter()}
         try:
             with tracer.trace(f"batch-{epoch_id}") if traced else contextlib.nullcontext():
                 if traced:
@@ -174,18 +171,26 @@ def run(ctx) -> dict:
         b["end"] = time.perf_counter()
         batches.append(b)
 
-    if traced:
-        sqlm.mark()
+    pages = [gen.page(PAGE_EVENTS)]
+    _write_page(pages[0], tmp_dir, spool, 0)
     q = _stream(spark, spool, os.path.join(work, "ckpt"), sink, observe=traced)
+    q.processAllAvailable()  # the seed page
+    del batches[:]
+    shipped, export = export.shipped, Export(wh, export.store)
+    export.shipped = shipped
+    spark.streams.addListener(progress)
+    if traced:
+        tracer.spans.clear()
+        sqlm.mark()
     window_start = time.perf_counter()
     n_pages = int(ctx.seconds // PAGE_INTERVAL_S) + 1
 
     def generate() -> None:
-        for i in range(1, n_pages + 1):
-            t_due = window_start + (i - 1) * PAGE_INTERVAL_S
+        for i in range(n_pages):
+            t_due = window_start + i * PAGE_INTERVAL_S
             time.sleep(max(0.0, t_due - time.perf_counter()))
             page = gen.page(PAGE_EVENTS)
-            _write_page(page, tmp_dir, spool, i)
+            _write_page(page, tmp_dir, spool, 1 + i)
             late.append(time.perf_counter() - t_due)
             due.append(t_due)
             pages.append(page)
@@ -206,7 +211,7 @@ def run(ctx) -> dict:
               check_export(fact, export.shipped, export.store.read()),
               [] if len(batches) == n_pages else [f"{len(batches)} batches for {n_pages} pages"]]
     problems = [p for c in checks for p in c]
-    fresh = [b["end"] - due[b["page"] - 1] for b in batches if b["page"] <= len(due)]
+    fresh = [b["end"] - due[b["page"]] for b in batches if b["page"] < len(due)]
     events = PAGE_EVENTS * len(batches)
     e2e = {
         "setup_s": statistics.median(setups),
