@@ -1,15 +1,16 @@
 """catalog_sweep: the read-only analytics surface, one client, closed loop.
 
 The tables are generated from the seed (catalog_data). A sweep runs the
-queries of ``sweep()`` -- every SWEEP_STRIDE-th active REGISTRY query, in
-ORIGINAL_ORDER -- one after the other, building each and materializing it
-with the noop sink. Whole sweeps repeat until the window is spent, and at
-least twice: the first sweep pays the engine's first-use cost and is kept
-out of the metrics (it is in the run record), so every metric averages
-over whole warm sweeps. The stride samples the modules about in
-proportion, so build-heavy text and vector queries and exec-heavy
-relational ones are both in it; the full registry takes minutes even on
-small tables, longer than a run may last.
+queries of ``sweep()`` -- every SWEEP_STRIDE-th active REGISTRY query of
+each plans module, in ORIGINAL_ORDER -- one after the other, building each
+and materializing it with the noop sink. Whole sweeps repeat until the
+window is spent, and at least twice: the first sweep pays the engine's
+first-use cost and is kept out of the metrics (it is in the run record),
+so every metric averages over whole warm sweeps. The stride samples the
+modules in proportion, and every module at least once, so build-heavy
+text and vector queries and exec-heavy relational ones are both in it;
+the full registry takes minutes even on small tables, longer than a run
+may last.
 
 Set-up time is the median of SETUP_REPEATS loads of every table through
 ``sources.parquet.load_table``, each counted. Correctness: after the window,
@@ -35,14 +36,23 @@ from .stats import summarize
 from .trace import catalyst_phases
 
 SWEEP_STRIDE = 10
-SETUP_REPEATS = 3
+SETUP_REPEATS = 5
 ORACLE_PER_RUN = 4
 MODULES = ("catalog", "relational_ext", "expr_ext", "northstar", "llm_ext")
 
 
 def sweep() -> list[str]:
-    active = [n for n in ORIGINAL_ORDER if n in REGISTRY]
-    return active[::SWEEP_STRIDE]
+    """Every SWEEP_STRIDE-th active query of each module (so at least one
+    per module), in ORIGINAL_ORDER."""
+    seen: dict[str, int] = defaultdict(int)
+    picked = []
+    for name in ORIGINAL_ORDER:
+        if name in REGISTRY:
+            mod = _module(name)
+            if seen[mod] % SWEEP_STRIDE == 0:
+                picked.append(name)
+            seen[mod] += 1
+    return picked
 
 
 def _module(name: str) -> str:

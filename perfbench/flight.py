@@ -39,7 +39,7 @@ from .wire import NOW_EXPR, Page, WireGenerator, expected_fact
 
 PAGE_EVENTS = 100  # the reference poller's per-call limit
 PAGE_INTERVAL_S = 12.0  # above the 5-10 s per batch seen at HEAD on a loaded host: no backlog
-SETUP_REPEATS = 5
+SETUP_REPEATS = 9
 EXPORT_LIMIT = 300  # the reference export's batch size
 TABLES = ("dim_airline", "dim_airport", "dim_route", "fact_flight_status")
 
@@ -80,14 +80,14 @@ class Export:
     """Ships every pending group of the curated view, as the reference's
     export loop does after each warehouse cycle."""
 
-    def __init__(self, wh, store) -> None:
-        self.wh, self.store = wh, store
+    def __init__(self, wh, store, tracer) -> None:
+        self.wh, self.store, self.tracer = wh, store, tracer
         self.shipped: dict = {}
         self.rows = self.calls = 0
         self.seconds = 0.0
         self.catalyst: list[dict] = []
 
-    def drain(self, traced: bool) -> None:
+    def drain(self) -> None:
         t0 = time.perf_counter()
         while True:
             batch = watermark.next_export_batch(
@@ -96,8 +96,9 @@ class Export:
             if batch.new_watermark is None:
                 break
             rows = arrow_rows(batch.rows.select("flight_key", "last_updated").toArrow())
-            if traced:
-                self.catalyst.append(catalyst_phases(batch.rows))
+            if self.tracer:
+                with self.tracer.own():
+                    self.catalyst.append(catalyst_phases(batch.rows))
             for r in rows:
                 prev = self.shipped.get(r["flight_key"])
                 if prev is None or r["last_updated"] > prev:
@@ -130,7 +131,7 @@ def run(ctx) -> dict:
     traced = tracer is not None
     gen = WireGenerator(ctx.seed)
     wh = pipeline.FlightWarehouse(spark, os.path.join(work, "wh"))
-    export = Export(wh, watermark.WatermarkStore(os.path.join(work, "watermark.json")))
+    export = Export(wh, watermark.WatermarkStore(os.path.join(work, "watermark.json")), tracer)
     spool, tmp_dir = os.path.join(work, "spool"), os.path.join(work, "spool_tmp")
     os.makedirs(spool)
     os.makedirs(tmp_dir)
@@ -160,7 +161,7 @@ def run(ctx) -> dict:
                         b["fact_before"] = _version_files(wh.fact)[2]
                         sqlm.counts()
                 pipeline.warehouse_load(wh, batch_df)
-                export.drain(traced)
+                export.drain()
                 if traced:
                     with tracer.own():
                         b["engine"] = sqlm.counts()
@@ -176,7 +177,7 @@ def run(ctx) -> dict:
     q = _stream(spark, spool, os.path.join(work, "ckpt"), sink, observe=traced)
     q.processAllAvailable()  # the seed page
     del batches[:]
-    shipped, export = export.shipped, Export(wh, export.store)
+    shipped, export = export.shipped, Export(wh, export.store, tracer)
     export.shipped = shipped
     spark.streams.addListener(progress)
     if traced:
@@ -216,7 +217,7 @@ def run(ctx) -> dict:
     e2e = {
         "setup_s": statistics.median(setups),
         "latency_p50_s": summarize(fresh)["p50"],
-        "throughput_per_s": events / (batches[-1]["end"] - window_start),
+        "throughput_per_s": events / sum(b["end"] - b["start"] for b in batches),
     }
     detail = {"setup_runs_s": setups, "freshness_s": fresh, "generator_late_s": late,
               "progress": progress.progress, "shares": gen.shares(),

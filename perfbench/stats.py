@@ -21,17 +21,17 @@ def beyond(n: int, q: float) -> int:
     return n - max(1, math.ceil(q / 100.0 * n))
 
 
-def summarize(values: list[float], min_beyond: int = 10) -> dict:
+def summarize(values: list[float]) -> dict:
     """Median, plus the highest percentile of the ladder that still has at
-    least ``min_beyond`` samples above it (None when even p75 has fewer),
-    with the sample counts that qualify it."""
+    least ten samples above it (None when even p75 has fewer), with the
+    sample counts that qualify it."""
     if not values:
         raise ValueError("no samples")
     out = {"n": len(values), "p50": statistics.median(values),
            "q": None, "pq": None, "beyond": None}
     for q in _LADDER:
         b = beyond(len(values), q)
-        if b >= min_beyond:
+        if b >= 10:
             out.update(q=q, pq=nearest_rank(values, q), beyond=b)
             break
     return out

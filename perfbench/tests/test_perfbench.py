@@ -181,3 +181,14 @@ def test_plan_metrics_reads_every_node_label():
     assert ("Scan parquet ", "number of output rows", "6,000") in got
     assert ("HashAggregate", "spill size", "0.0 B") in got
     assert len(got) == 6
+
+
+# -- catalog subset ----------------------------------------------------------
+def test_sweep_takes_every_module_in_original_order():
+    from real_time_flight_data_pipeline_spark.plans import ORIGINAL_ORDER
+
+    from perfbench.catalog import MODULES, _module, sweep
+
+    names = sweep()
+    assert {_module(n) for n in names} == set(MODULES)
+    assert names == [n for n in ORIGINAL_ORDER if n in set(names)]

@@ -40,6 +40,15 @@ KEPT_SPELLINGS = ("active", "Active", "ACTIVE", "landed", "Landed", "arrived",
                   "en-route", "enroute")
 DROPPED_STATUSES = ("scheduled", "cancelled", "diverted", "incident")
 
+# Share of kept events that re-poll a flight already sent (an update); the
+# others announce a new flight (an insert).
+UPDATE_SHARE = 0.7
+# Shares of all events dropped by the status filter, by the retention
+# filter, and lines that are not JSON.
+STATUS_DROP_SHARE = 0.06
+STALE_SHARE = 0.04
+UNPARSEABLE_SHARE = 0.02
+
 # Fact columns compared against the expected table (ids and last_updated are
 # checked separately: ids for presence, last_updated against the export).
 FACT_VALUE_COLUMNS = (
@@ -124,15 +133,10 @@ class Page:
 
 @dataclass
 class WireGenerator:
-    """Deterministic per seed. ``update_share`` is the share of kept events
-    that re-poll a flight already sent; the ``*_share`` drops are shares of
-    all events."""
+    """Deterministic per seed; the event mix follows the ``*_SHARE``
+    constants above."""
 
     seed: int
-    update_share: float = 0.7
-    status_drop_share: float = 0.06
-    stale_share: float = 0.04
-    unparseable_share: float = 0.02
     stats: Counter = field(default_factory=Counter)
 
     def __post_init__(self) -> None:
@@ -246,21 +250,21 @@ class WireGenerator:
         truths: list[Truth | None] = []
         for _ in range(n_events):
             u = rng.random()
-            if u < self.unparseable_share:
+            if u < UNPARSEABLE_SHARE:
                 self.n_events += 1
                 lines.append('{"flight_key":"' + str(rng.randint(0, 10**6)) + '","status":')
                 truths.append(None)
                 self.stats["unparseable"] += 1
                 continue
-            u -= self.unparseable_share
-            if u < self.stale_share:
+            u -= UNPARSEABLE_SHARE
+            if u < STALE_SHARE:
                 line, t = self._event(self._new_flight(stale=True), rng.choice(KEPT_SPELLINGS))
                 self.stats["stale"] += 1
-            elif u - self.stale_share < self.status_drop_share:
+            elif u - STALE_SHARE < STATUS_DROP_SHARE:
                 f = rng.choice(self.live) if self.live and rng.random() < 0.5 else self._new_flight(False)
                 line, t = self._event(f, rng.choice(DROPPED_STATUSES))
                 self.stats["status_dropped"] += 1
-            elif self.live and rng.random() < self.update_share:
+            elif self.live and rng.random() < UPDATE_SHARE:
                 line, t = self._event(rng.choice(self.live), rng.choice(KEPT_SPELLINGS))
                 self.stats["update"] += 1
             else:
