@@ -117,14 +117,13 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalized_text(text))
 
 
-def md5_long(c: Column, bits: int = 60) -> Column:
+def md5_long(c: Column) -> Column:
     """Deterministic cross-engine hash: first 15 hex chars of md5 -> bigint.
 
     15 hex digits = 60 bits, always positive, fits a 64-bit signed long in
     every engine. Used for minhash/simhash where xxhash64 would not be
     reproducible in the DuckDB oracle.
     """
-    assert bits == 60
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 

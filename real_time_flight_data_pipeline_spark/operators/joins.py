@@ -40,22 +40,37 @@ def resolve_dim_id(
     ``fallback_requires_primary_null`` (the reference's guard) the fallback
     match only applies to rows whose primary source column is NULL.
     Dims are broadcast: in a star schema the dim side is small by design.
-    """
-    src_p, dim_p = primary
-    d = F.broadcast(dim) if broadcast_dim else dim
 
-    prim = d.filter(F.col(dim_p).isNotNull()).select(
-        F.col(dim_p).alias("_pk"), F.col(dim_id_col).alias("_pid")
-    )
+    One id per code: the result has exactly one row per ``df`` row. The
+    reference could rely on UNIQUE(iata)/UNIQUE(icao) on its dims
+    (db/00_warehous.sql:77-101); our dims have no such constraint — an
+    airport first seen IATA-only and later with its ICAO is two dim rows
+    sharing one IATA — so an unguarded lookup join would duplicate the
+    probe row. Among dim rows sharing a code, the lookup picks the row that
+    also carries the other code, then the smallest id. A code that is the
+    dim's id column is unique already and skips that aggregate.
+    """
+    d = F.broadcast(dim) if broadcast_dim else dim
+    codes = [primary[1]] + ([fallback[1]] if fallback else [])
+
+    def lookup(dim_col: str, key: str, val: str) -> DataFrame:
+        m = d.filter(F.col(dim_col).isNotNull())
+        if dim_col != dim_id_col:
+            prefer = [F.col(c).isNull() for c in codes if c != dim_col]
+            m = m.groupBy(dim_col).agg(
+                F.min_by(dim_id_col, F.struct(*prefer, F.col(dim_id_col))).alias(dim_id_col)
+            )
+        return m.select(F.col(dim_col).alias(key), F.col(dim_id_col).alias(val))
+
+    src_p, dim_p = primary
+    prim = lookup(dim_p, "_pk", "_pid")
     out = df.join(prim, df[src_p] == prim["_pk"], "left").drop("_pk")
 
     if fallback is None:
         return out.withColumnRenamed("_pid", out_col)
 
     src_f, dim_f = fallback
-    fb = d.filter(F.col(dim_f).isNotNull()).select(
-        F.col(dim_f).alias("_fk"), F.col(dim_id_col).alias("_fid")
-    )
+    fb = lookup(dim_f, "_fk", "_fid")
     out = out.join(fb, out[src_f] == fb["_fk"], "left").drop("_fk")
 
     fb_applies = F.col(src_p).isNull() if fallback_requires_primary_null else F.lit(True)

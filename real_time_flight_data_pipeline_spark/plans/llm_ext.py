@@ -6396,7 +6396,8 @@ def q_docs_curated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the `btoks` rebuild below (braw.filter(% 10 != 9) tokenized inline)
     # is exactly "everything not already tokenized in toks_all".
     _plant_ids = [i for i, _ in hist_plant_rows + batch_plant_rows] + [9_000_007]
-    assert all(i % 10 != 9 for i in _plant_ids), "plant id in the corpus-batch class"
+    if any(i % 10 == 9 for i in _plant_ids):
+        raise ValueError("plant id in the corpus-batch class")
     hist_plants = spark.createDataFrame(hist_plant_rows, "doc_id long, text string")
     batch_plants = spark.createDataFrame(batch_plant_rows, "doc_id long, text string")
 

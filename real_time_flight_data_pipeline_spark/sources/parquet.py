@@ -8,6 +8,7 @@ columns they need so ``ReadSchema`` stays narrow.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,29 +48,52 @@ def _ensure_runtime_confs(spark: SparkSession) -> None:
 _RG_CACHE: dict[tuple[str, int, float], int] = {}
 
 
+# Binary units, as Spark's JavaUtils.byteStringAsBytes reads a byte conf.
+_BYTE_UNITS = {
+    "": 1, "b": 1,
+    "k": 1 << 10, "kb": 1 << 10,
+    "m": 1 << 20, "mb": 1 << 20,
+    "g": 1 << 30, "gb": 1 << 30,
+    "t": 1 << 40, "tb": 1 << 40,
+    "p": 1 << 50, "pb": 1 << 50,
+}
+
+
+def _byte_conf(spark: SparkSession, key: str, default: str) -> int:
+    """A byte-size SQL conf in bytes. Raises ValueError on a value Spark
+    itself would reject, rather than guessing a default."""
+    raw = str(spark.conf.get(key, default))
+    m = re.fullmatch(r"\s*(\d+)\s*([a-z]*)\s*", raw.lower())
+    if m is None or m.group(2) not in _BYTE_UNITS:
+        raise ValueError(f"{key}={raw!r} is not a byte size")
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
+
+
 def _max_partition_bytes(spark: SparkSession) -> int:
-    """spark.sql.files.maxPartitionBytes as an int (default 128 MiB)."""
-    try:
-        raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))
-        raw = raw.strip().lower()
-        mult = 1
-        for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                          ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-            if raw.endswith(suffix):
-                raw, mult = raw[: -len(suffix)], m
-                break
-        return int(raw) * mult
-    except Exception:
-        return 128 * 1024 * 1024
+    """spark.sql.files.maxPartitionBytes in bytes (default 128 MiB)."""
+    return _byte_conf(spark, "spark.sql.files.maxPartitionBytes", "128m")
 
 
-def _scan_splits(path: str, max_part_bytes: int = 128 * 1024 * 1024) -> int | None:
+def _min_partition_num(spark: SparkSession) -> int:
+    """The partition count Spark aims a file scan at: minPartitionNum, else
+    the leaf-node default parallelism, else the context's parallelism."""
+    for key in ("spark.sql.files.minPartitionNum", "spark.sql.leafNodeDefaultParallelism"):
+        raw = spark.conf.get(key, None)
+        if raw is not None:
+            return int(raw)
+    return spark.sparkContext.defaultParallelism
+
+
+def _scan_splits(
+    path: str, max_part_bytes: int, open_cost: int, parallelism: int
+) -> int | None:
     """Effective scan parallelism of a parquet file: Spark cannot split a
     scan below a row-group boundary, so one file's usable task count is
     capped by its row-group count (byte-range splits beyond that are
     empty) — AND by the byte-range split count Spark will actually plan,
-    ceil(size / maxPartitionBytes): a small file with many row groups
-    still scans as ONE task (r17, ADVICE). None when the probe cannot
+    ceil(size / maxSplitBytes), where maxSplitBytes follows Spark's
+    FilePartition.maxSplitBytes: min(maxPartitionBytes, max(openCostInBytes,
+    (size + openCostInBytes) / parallelism)). None when the probe cannot
     answer (caller falls back to asking Spark)."""
     try:
         st = os.stat(path)
@@ -80,7 +104,9 @@ def _scan_splits(path: str, max_part_bytes: int = 128 * 1024 * 1024) -> int | No
 
             n = pq.ParquetFile(path).metadata.num_row_groups
             _RG_CACHE[key] = n
-        byte_splits = max(1, -(-st.st_size // max(1, max_part_bytes)))
+        per_core = (st.st_size + open_cost) // max(1, parallelism)
+        max_split = max(1, min(max_part_bytes, max(open_cost, per_core)))
+        byte_splits = max(1, -(-st.st_size // max_split))
         return min(n, byte_splits)
     except Exception:
         return None
@@ -100,7 +126,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(c, F.to_utc_timestamp(F.col(c), "UTC"))
     # Single-file layout: the footer answers "how parallel can this scan
     # be" without a JVM round trip; _spread reads it via this attribute.
-    df._ff_scan_splits = _scan_splits(path, _max_partition_bytes(spark))
+    df._ff_scan_splits = _scan_splits(
+        path,
+        _max_partition_bytes(spark),
+        _byte_conf(spark, "spark.sql.files.openCostInBytes", "4m"),
+        _min_partition_num(spark),
+    )
     return df
 
 

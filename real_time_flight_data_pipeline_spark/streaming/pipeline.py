@@ -40,8 +40,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.normalize import parse_flight_ts
-from ..operators.dedup import latest_per_key
-from ..operators.merge import MergePolicy, merge_upsert
+from ..operators.dedup import distinct_pairs, latest_per_key
+from ..operators.joins import resolve_dim_id, star_join
+from ..operators.merge import MergePolicy, insert_if_absent, merge_upsert
 from ..schemas import (
     DIM_AIRLINE_SCHEMA,
     DIM_AIRPORT_SCHEMA,
@@ -245,14 +246,21 @@ class ParquetTable:
         on_disk = {n for n in os.listdir(self.path) if n.startswith("v_")}
         return [v for v in logged if v in on_disk]
 
-    def read(self, version: str | None = None) -> DataFrame:
-        v = version or self._current_version()
-        if v is None:
-            return self.spark.createDataFrame([], self.schema)
-        if version is not None and version not in self.versions():
+    def _version_to_read(self, version: str | None) -> str | None:
+        """``version`` if it is still retained, else raise; the current
+        version when ``version`` is None (None for an empty table)."""
+        if version is None:
+            return self._current_version()
+        if version not in self.versions():
             raise ValueError(
                 f"version {version!r} not in retained history {self.versions()}"
             )
+        return version
+
+    def read(self, version: str | None = None) -> DataFrame:
+        v = self._version_to_read(version)
+        if v is None:
+            return self.spark.createDataFrame([], self.schema)
         return self.spark.read.schema(self.schema).parquet(os.path.join(self.path, v))
 
     def _write_version(self, df: DataFrame, out: str, v: str) -> None:
@@ -404,13 +412,9 @@ class BucketedParquetTable(ParquetTable):
         )
 
     def read(self, version: str | None = None) -> DataFrame:
-        v = version or self._current_version()
+        v = self._version_to_read(version)
         if v is None:
             return self.spark.createDataFrame([], self.schema)
-        if version is not None and version not in self.versions():
-            raise ValueError(
-                f"version {version!r} not in retained history {self.versions()}"
-            )
         # A table already in the session catalog was registered either by
         # the bucketed write itself or by a prior validated registration —
         # trust it. Otherwise only register bucket metadata when the commit
@@ -485,7 +489,7 @@ def _airport_id(iata: F.Column, icao: F.Column) -> F.Column:
     (load_warehouse.py:124-151) links records by ICAO and backfills a late
     IATA code onto the ICAO row, so ICAO is the stable identity. (An airport
     seen first IATA-only and later with an ICAO becomes two dim rows sharing
-    an IATA; lookup joins guard against that via _unique_code_map.)"""
+    an IATA; resolve_dim_id keeps one id per code, so lookups stay 1:1.)"""
     nk = F.coalesce(F.concat(F.lit("icao#"), icao), F.concat(F.lit("iata#"), iata))
     return F.xxhash64(F.lit("airport"), nk)
 
@@ -497,128 +501,72 @@ def _route_id(dep_id: F.Column, arr_id: F.Column) -> F.Column:
 # ---------------------------------------------------------------------------
 # Stage 2: the warehouse load cycle (one micro-batch)
 # ---------------------------------------------------------------------------
-def _upsert_airlines(wh: FlightWarehouse, latest: DataFrame) -> None:
-    """M1+M2 collapsed: one COALESCE-merge per natural key. The reference
-    needs two code paths only because Postgres cannot ON CONFLICT a nullable
-    unique column (load_warehouse.py:32-79); a keyed MERGE has no such
-    restriction, and the resulting table contents match (SURVEY.md §7.4.6)."""
-    src = (
-        latest.filter(F.col("airline_iata").isNotNull() | F.col("airline_icao").isNotNull())
-        .select("airline_iata", "airline_icao", "airline_name", "ingest_time")
-    )
-    keyed = src.select(
+def _airline_rows(latest: DataFrame) -> DataFrame:
+    """Keyed dim_airline rows; a row with neither code has no key (F7)."""
+    return latest.filter(
+        F.col("airline_iata").isNotNull() | F.col("airline_icao").isNotNull()
+    ).select(
         _airline_id(F.col("airline_iata"), F.col("airline_icao")).alias("airline_id"),
         F.col("airline_iata").alias("iata"),
         F.col("airline_icao").alias("icao"),
         "airline_name",
         "ingest_time",
     )
-    per_key = latest_per_key(keyed, ["airline_id"], ["ingest_time"]).drop("ingest_time")
-    merged = merge_upsert(
-        wh.airline.read(),
-        per_key,
-        keys=["airline_id"],
-        policies={},  # COALESCE(new, old) everywhere: never wipe with NULL
-        default=MergePolicy.COALESCE_NEW_OLD,
-    )
-    wh.airline.overwrite(merged)
 
 
-def _upsert_airports(wh: FlightWarehouse, latest: DataFrame) -> None:
-    dep = latest.select(
-        F.col("dep_airport_iata").alias("iata"),
-        F.col("dep_airport_icao").alias("icao"),
-        F.col("dep_airport").alias("airport_name"),
-        "ingest_time",
-    )
-    arr = latest.select(
-        F.col("arr_airport_iata").alias("iata"),
-        F.col("arr_airport_icao").alias("icao"),
-        F.col("arr_airport").alias("airport_name"),
-        "ingest_time",
+def _airport_rows(latest: DataFrame) -> DataFrame:
+    """Keyed dim_airport rows from both ends of each flight; a side with
+    neither code has no key (F7)."""
+    dep, arr = (
+        latest.select(
+            F.col(f"{side}_airport_iata").alias("iata"),
+            F.col(f"{side}_airport_icao").alias("icao"),
+            F.col(f"{side}_airport").alias("airport_name"),
+            "ingest_time",
+        )
+        for side in ("dep", "arr")
     )
     src = dep.unionByName(arr).filter(
         F.col("iata").isNotNull() | F.col("icao").isNotNull()
     )
-    keyed = src.select(
+    return src.select(
         _airport_id(F.col("iata"), F.col("icao")).alias("airport_id"),
         "iata",
         "icao",
         "airport_name",
         "ingest_time",
     )
-    per_key = latest_per_key(keyed, ["airport_id"], ["ingest_time"]).drop("ingest_time")
-    merged = merge_upsert(
-        wh.airport.read(),
-        per_key,
-        keys=["airport_id"],
-        policies={},
-        default=MergePolicy.COALESCE_NEW_OLD,
-    )
-    wh.airport.overwrite(merged)
 
 
-def _unique_code_map(dim: DataFrame, code: str, id_col: str, prefer: str) -> DataFrame:
-    """One surrogate id per lookup code. Unlike the reference's
-    UNIQUE(iata)/UNIQUE(icao) constraints (db/00_warehous.sql:77-101), these
-    dim columns are not unique here: an airport first seen IATA-only (keyed
-    iata#X) and later with an ICAO (keyed icao#Y, same iata) is two dim rows
-    sharing one IATA — an unguarded lookup join on that code would then
-    duplicate fact rows and break the flight_key grain. Pick deterministically:
-    prefer the row carrying the stronger identity column (``prefer`` non-NULL),
-    tie-break on smallest id."""
-    return (
-        dim.filter(F.col(code).isNotNull())
-        .groupBy(code)
-        .agg(F.min_by(id_col, F.struct(F.col(prefer).isNull(), F.col(id_col))).alias(id_col))
+def _upsert_dim(table: ParquetTable, keyed: DataFrame, id_col: str) -> None:
+    """M1+M2 collapsed: one COALESCE-merge per natural key. The reference
+    needs two code paths only because Postgres cannot ON CONFLICT a nullable
+    unique column (load_warehouse.py:32-79); a keyed MERGE has no such
+    restriction, and the resulting table contents match (SURVEY.md §7.4.6).
+    COALESCE(new, old) everywhere: a dim column is never wiped with NULL."""
+    per_key = latest_per_key(keyed, [id_col], ["ingest_time"]).drop("ingest_time")
+    table.overwrite(
+        merge_upsert(
+            table.read(),
+            per_key,
+            keys=[id_col],
+            policies={},
+            default=MergePolicy.COALESCE_NEW_OLD,
+        )
     )
 
 
-def _resolve_airport_ids(latest: DataFrame, airports: DataFrame, side: str) -> DataFrame:
+def _resolve_airport(df: DataFrame, airports: DataFrame, side: str) -> DataFrame:
     """J2/J3 decomposed: IATA equi-join, ICAO equi-join guarded on IATA NULL,
-    COALESCE preference (reference load_warehouse.py:222-235, decomposed per
-    SURVEY.md §7.4.5). Dims broadcast — the fact side never shuffles. Lookup
-    maps are deduplicated to one id per code (see _unique_code_map)."""
-    iata_map = F.broadcast(
-        _unique_code_map(airports, "iata", "airport_id", prefer="icao").select(
-            F.col("iata").alias(f"_{side}_iata"), F.col("airport_id").alias(f"_{side}_iid")
-        )
+    COALESCE preference (reference load_warehouse.py:222-235)."""
+    return resolve_dim_id(
+        df,
+        airports,
+        out_col=f"{side}_airport_id",
+        dim_id_col="airport_id",
+        primary=(f"{side}_airport_iata", "iata"),
+        fallback=(f"{side}_airport_icao", "icao"),
     )
-    icao_map = F.broadcast(
-        _unique_code_map(airports, "icao", "airport_id", prefer="iata").select(
-            F.col("icao").alias(f"_{side}_icao"), F.col("airport_id").alias(f"_{side}_cid")
-        )
-    )
-    out = (
-        latest.join(iata_map, latest[f"{side}_airport_iata"] == iata_map[f"_{side}_iata"], "left")
-        .drop(f"_{side}_iata")
-        .join(icao_map, latest[f"{side}_airport_icao"] == icao_map[f"_{side}_icao"], "left")
-        .drop(f"_{side}_icao")
-    )
-    resolved = F.coalesce(
-        F.col(f"_{side}_iid"),
-        F.when(F.col(f"{side}_airport_iata").isNull(), F.col(f"_{side}_cid")),
-    )
-    return out.withColumn(f"{side}_airport_id", resolved).drop(f"_{side}_iid", f"_{side}_cid")
-
-
-def _upsert_routes(wh: FlightWarehouse, resolved: DataFrame) -> None:
-    """A2 + M3: distinct (dep_id, arr_id) pairs, insert-ignore."""
-    pairs = (
-        resolved.filter(
-            F.col("dep_airport_id").isNotNull() & F.col("arr_airport_id").isNotNull()
-        )
-        .select("dep_airport_id", "arr_airport_id")
-        .dropDuplicates()
-        .select(
-            _route_id(F.col("dep_airport_id"), F.col("arr_airport_id")).alias("route_id"),
-            "dep_airport_id",
-            "arr_airport_id",
-        )
-    )
-    target = wh.route.read()
-    fresh = pairs.join(target.select("route_id"), "route_id", "left_anti")
-    wh.route.overwrite(target.unionByName(fresh))
 
 
 def warehouse_load(
@@ -627,46 +575,43 @@ def warehouse_load(
     """One load cycle in the reference's statement order (load_warehouse.py:
     322-327): airlines -> airports -> routes -> fact. The micro-batch
     boundary replaces the loader's single now() cutoff (F4); ``batch_ts_expr``
-    is last_updated (injected in tests for determinism)."""
-    staging = staging.localCheckpoint(eager=True)  # cut lineage; read once per stage
+    is last_updated (injected in tests for determinism).
+
+    ``latest`` is the one barrier: every stage below reads it, and it is
+    one row per flight_key. Each lookup map is one row per code
+    (resolve_dim_id), so the left joins cannot fan out and the fact source
+    keeps that grain for merge_upsert."""
     latest = latest_per_key(
         staging, ["flight_key"], ["ingest_time", F.col("dep_scheduled")]
     ).localCheckpoint(eager=True)
 
-    _upsert_airlines(wh, latest)
-    _upsert_airports(wh, latest)
+    _upsert_dim(wh.airline, _airline_rows(latest), "airline_id")
+    _upsert_dim(wh.airport, _airport_rows(latest), "airport_id")
 
     airports = wh.airport.read()
-    resolved = _resolve_airport_ids(latest, airports, "dep")
-    resolved = _resolve_airport_ids(resolved, airports, "arr")
-    _upsert_routes(wh, resolved)
+    resolved = _resolve_airport(_resolve_airport(latest, airports, "dep"), airports, "arr")
 
-    airlines = wh.airline.read()
-    with_aid = resolved.join(
-        F.broadcast(
-            _unique_code_map(airlines, "iata", "airline_id", prefer="icao").select(
-                F.col("iata").alias("_a_iata"), F.col("airline_id").alias("_aid_i")
-            )
+    # A2 + M3: distinct (dep_id, arr_id) pairs, insert-ignore.
+    pairs = distinct_pairs(
+        resolved.filter(
+            F.col("dep_airport_id").isNotNull() & F.col("arr_airport_id").isNotNull()
         ),
-        resolved["airline_iata"] == F.col("_a_iata"),
-        "left",
-    ).drop("_a_iata")
-    icao_air = F.broadcast(
-        _unique_code_map(airlines, "icao", "airline_id", prefer="iata").select(
-            F.col("icao").alias("_a_icao"), F.col("airline_id").alias("_aid_c")
-        )
+        ["dep_airport_id", "arr_airport_id"],
+    ).select(
+        _route_id(F.col("dep_airport_id"), F.col("arr_airport_id")).alias("route_id"),
+        "dep_airport_id",
+        "arr_airport_id",
     )
-    with_aid = with_aid.join(
-        icao_air, with_aid["airline_icao"] == icao_air["_a_icao"], "left"
-    ).drop("_a_icao")
-    with_aid = with_aid.withColumn(
-        "airline_id",
-        F.coalesce(
-            F.col("_aid_i"),
-            F.when(F.col("airline_iata").isNull(), F.col("_aid_c")),
-        ),
-    ).drop("_aid_i", "_aid_c")
+    wh.route.overwrite(insert_if_absent(wh.route.read(), pairs, ["route_id"]))
 
+    with_aid = resolve_dim_id(
+        resolved,
+        wh.airline.read(),
+        out_col="airline_id",
+        dim_id_col="airline_id",
+        primary=("airline_iata", "iata"),
+        fallback=("airline_icao", "icao"),
+    )
     fact_src = with_aid.select(
         "flight_key",
         "flight_date",
@@ -686,14 +631,6 @@ def warehouse_load(
         "arr_actual",
         "arr_delay_min",
         F.expr(batch_ts_expr).alias("last_updated"),
-    )
-    # Safety net for merge_upsert's one-row-per-key precondition: even though
-    # the lookup maps are deduplicated, re-assert the flight_key grain after
-    # id resolution (ids as tie-breaks make the pick deterministic).
-    fact_src = latest_per_key(
-        fact_src,
-        ["flight_key"],
-        ["ingest_time", F.col("dep_scheduled"), F.col("airline_id"), F.col("route_id")],
     )
 
     # M4: measures/timestamps overwritten (incl. NULL); ingest_time GREATEST;
@@ -718,39 +655,34 @@ def warehouse_load(
 
 def curated_view(wh: FlightWarehouse) -> DataFrame:
     """J1: the 20-column denormalized export view (db/01_views.sql:44-83)."""
-    fact = wh.fact.read()
-    airline = F.broadcast(wh.airline.read())
-    route = F.broadcast(wh.route.read())
     airport = wh.airport.read()
-    dep = F.broadcast(
-        airport.select(
-            F.col("airport_id").alias("dep_airport_id"),
-            F.col("airport_name").alias("dep_airport"),
-            F.col("iata").alias("dep_iata"),
-            F.col("icao").alias("dep_icao"),
+
+    def airport_side(side: str) -> DataFrame:
+        return airport.select(
+            F.col("airport_id").alias(f"{side}_airport_id"),
+            F.col("airport_name").alias(f"{side}_airport"),
+            F.col("iata").alias(f"{side}_iata"),
+            F.col("icao").alias(f"{side}_icao"),
         )
+
+    airline = wh.airline.read().select(
+        "airline_id", F.col("iata").alias("airline_iata"), "airline_name"
     )
-    arr = F.broadcast(
-        airport.select(
-            F.col("airport_id").alias("arr_airport_id"),
-            F.col("airport_name").alias("arr_airport"),
-            F.col("iata").alias("arr_iata"),
-            F.col("icao").alias("arr_icao"),
-        )
-    )
-    return (
-        fact.join(airline.select("airline_id", F.col("iata").alias("airline_iata"), "airline_name"), "airline_id", "left")
-        .join(route, "route_id", "left")
-        .join(dep, "dep_airport_id", "left")
-        .join(arr, "arr_airport_id", "left")
-        .select(
-            "flight_key", "flight_date", "status", "airline_iata", "airline_name",
-            "dep_scheduled", "dep_estimated", "dep_actual", "dep_delay_min",
-            "arr_scheduled", "arr_estimated", "arr_actual", "arr_delay_min",
-            "dep_airport", "dep_iata", "dep_icao",
-            "arr_airport", "arr_iata", "arr_icao",
-            "last_updated",
-        )
+    return star_join(
+        wh.fact.read(),
+        [
+            (airline, "airline_id", "al"),
+            (wh.route.read(), "route_id", "rt"),
+            (airport_side("dep"), "dep_airport_id", "dep"),
+            (airport_side("arr"), "arr_airport_id", "arr"),
+        ],
+    ).select(
+        "flight_key", "flight_date", "status", "airline_iata", "airline_name",
+        "dep_scheduled", "dep_estimated", "dep_actual", "dep_delay_min",
+        "arr_scheduled", "arr_estimated", "arr_actual", "arr_delay_min",
+        "dep_airport", "dep_iata", "dep_icao",
+        "arr_airport", "arr_iata", "arr_icao",
+        "last_updated",
     )
 
 

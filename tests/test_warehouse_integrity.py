@@ -10,6 +10,7 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from real_time_flight_data_pipeline_spark.operators.joins import resolve_dim_id
 from real_time_flight_data_pipeline_spark.operators.merge import (
     MergePolicy,
     merge_upsert,
@@ -58,6 +59,32 @@ def test_shared_iata_across_dim_rows_keeps_fact_grain(spark, tmp_path):
     assert sorted(keys) == ["A1", "A2", "A3"]  # one row per key, no dup blowup
     a3 = fact.filter(F.col("flight_key") == "A3").collect()[0]
     assert a3["airline_id"] is not None and a3["route_id"] is not None
+
+
+def test_resolve_dim_id_one_id_per_shared_code(spark):
+    """One IATA on two dim rows (ICAO NULL on one, set on the other): the
+    lookup must keep the probe grain and pick the row carrying the ICAO,
+    even though its id is not the smallest."""
+    dim = spark.createDataFrame(
+        [(1, "LGW", None), (7, "LGW", "EGKK")],
+        "airport_id long, iata string, icao string",
+    )
+    probe = spark.createDataFrame(
+        [("F1", "LGW", None), ("F2", None, "EGKK")],
+        "flight_key string, dep_iata string, dep_icao string",
+    )
+    out = resolve_dim_id(
+        probe,
+        dim,
+        out_col="dep_airport_id",
+        dim_id_col="airport_id",
+        primary=("dep_iata", "iata"),
+        fallback=("dep_icao", "icao"),
+    ).collect()
+    assert sorted((r["flight_key"], r["dep_airport_id"]) for r in out) == [
+        ("F1", 7),
+        ("F2", 7),
+    ]
 
 
 def test_merge_upsert_null_key_rows_match(spark):
